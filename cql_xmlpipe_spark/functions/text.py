@@ -24,10 +24,14 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 
 
+def _word_normalized(col: Column) -> Column:
+    """Lowercased text with every non-[a-z0-9] run collapsed to one space."""
+    return F.regexp_replace(F.lower(col), "[^a-z0-9]+", " ")
+
+
 def words(col: Column) -> Column:
     """Lowercased alnum word tokens; '' entries filtered (portable split)."""
-    normalized = F.regexp_replace(F.lower(col), "[^a-z0-9]+", " ")
-    return F.filter(F.split(normalized, " "), lambda x: x != "")
+    return F.filter(F.split(_word_normalized(col), " "), lambda x: x != "")
 
 
 def ws_tokens(col: Column) -> Column:
@@ -39,28 +43,34 @@ def bpe_ish_tokens(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit(BPE_TOKEN_RE), 0)
 
 
-def shingles(tokens: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles as space-joined strings (dedup unit).
+def word_shingles(col: Column, k: int = 3) -> Column:
+    """Distinct k-word shingles of ``words(col)`` as space-joined strings
+    (dedup unit), in first-occurrence order.
 
-    Built by zipping k shifted copies of the token array — NOT
-    ``transform(sequence, i -> slice(tokens, i, k))``: `slice` with a
-    lambda-bound start index falls off the codegen path and copies O(n)
-    per element (O(n²) per row — measured 6× slower on real documents).
+    One ``regexp_extract_all`` over the normalized string ``words()``
+    splits: a zero-width match at every word start whose lookahead
+    captures the next k words. It builds no token array and runs no
+    lambdas, where zipping shifted token arrays costs k-1 interpreted
+    ``zip_with`` passes. A text with fewer than k words yields ``[]``;
+    null yields null.
     """
-    n_sh = F.greatest(F.size(tokens) - (k - 1), F.lit(0))
-    acc = F.slice(tokens, 1, n_sh)
-    for i in range(1, k):
-        acc = F.zip_with(
-            acc, F.slice(tokens, i + 1, n_sh), lambda a, b: F.concat_ws(" ", a, b)
-        )
-    return F.array_distinct(acc)
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    w = "[a-z0-9]+"
+    pattern = f"(?<![a-z0-9])(?=((?:{w} ){{{k - 1}}}{w}))"
+    return F.array_distinct(
+        F.regexp_extract_all(_word_normalized(col), F.lit(pattern), 1)
+    )
 
 
 def ngrams(tokens: Column, k: int = 2) -> Column:
     """ALL k-word grams in order (duplicates kept) — the unit for
     repetition statistics, where multiplicity is the signal that
-    ``shingles``' array_distinct would destroy. Same zipped-shift
-    construction (codegen-safe, O(n))."""
+    ``word_shingles``' array_distinct would destroy. Built by zipping k
+    shifted copies of the token array — NOT
+    ``transform(sequence, i -> slice(tokens, i, k))``: `slice` with a
+    lambda-bound start index falls off the codegen path and copies O(n)
+    per element (O(n²) per row)."""
     n_g = F.greatest(F.size(tokens) - (k - 1), F.lit(0))
     acc = F.slice(tokens, 1, n_g)
     for i in range(1, k):

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from cql_xmlpipe_spark.functions.text import shingles, words
+from cql_xmlpipe_spark.functions.text import word_shingles, words
 
 N_MINHASH = 64
 N_BANDS = 16  # 16 bands x 4 rows; s-curve threshold ~ (1/16)^(1/4) ~ 0.5
@@ -226,7 +226,7 @@ def shingle_hash_sets(
     ONCE; everything downstream (minhash families, exact-Jaccard verify)
     derives from these 8-byte values, never from text again.
     """
-    sh = shingles(words(F.col(text_col)), k)
+    sh = word_shingles(F.col(text_col), k)
     hashed = F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s)))
     return df.select(F.col(id_col), hashed.alias("hs")).filter(F.size("hs") > 0)
 
@@ -754,7 +754,7 @@ def ngram_containment_pairs(
 
     Past either cap this raises :class:`PairOutputBudgetExceeded`
     toward the roster/dedup contracts exactly like the Jaccard family."""
-    sh = shingles(words(F.col(text_col)), k)
+    sh = word_shingles(F.col(text_col), k)
     block = F.col(block_col) if block_col is not None else F.lit("_")
     if max_pairs is not None:
         stats = _guard_clone_stats(
@@ -919,7 +919,7 @@ def ngram_jaccard_pairs(
             .persist()
         )
     else:
-        sh = shingles(words(F.col(text_col)), k)
+        sh = word_shingles(F.col(text_col), k)
         base = (
             df.select(
                 F.col(id_col),
@@ -1181,22 +1181,19 @@ def connected_components(
     against the symmetrized edge list plus one map-side-combining
     min-aggregate — labels and edges shuffle as bare longs, text never
     enters the loop (the jump adds one more label-table-sized long-key
-    join, only in escalated rounds). ``localCheckpoint`` truncates the
-    lineage each round so plan depth stays O(1) instead of O(rounds),
-    and the convergence test rides the same pass (an iterative algorithm
-    needs a per-round action by construction; this is the documented
-    exception to the lazy-plan rule). Edges are persisted once up front —
-    they feed every round — and unpersisted before return.
-
-    **Seed convergence check (r15):** quasi-clique components converge
-    in the seed itself, yet the loop paid a full round — build successor
-    labels, checkpoint-materialize them, then a second count job — just
-    to learn changed == 0. The fixpoint condition ("no vertex sees a
-    neighbor label below its own") is counted directly from the seed in
-    one aggregation-shaped action, so the common converged-at-seed case
-    runs seed + check and never materializes a second label table; a
-    non-converged corpus pays one extra aggregation pass (the same
-    join+agg a round runs) before the rounds proceed unchanged.
+    join, only in escalated rounds). Each round materializes exactly
+    once: one eager ``localCheckpoint`` of the proposed labels (which
+    also truncates the lineage, so plan depth stays O(1) instead of
+    O(rounds)), and the round's changed-label count is read from that
+    checkpointed table — a scan of cached blocks, never a recompute of
+    the join (an iterative algorithm needs a per-round action by
+    construction; this is the documented exception to the lazy-plan
+    rule). There is no separate convergence check on the seed: it would
+    be the same join plus aggregate round 0 runs, and it only pays off
+    when the seed has already converged, which LSH's missed
+    within-family edges make rare on real corpora. Edges are persisted
+    once up front — they feed every round — and unpersisted before
+    return.
     """
     sym = (
         pairs.select(F.col("id_a").alias("v"), F.col("id_b").alias("w"))
@@ -1204,8 +1201,8 @@ def connected_components(
         .persist()
     )
     # seed with the 1-hop minimum (same shuffle the vertex-distinct would
-    # cost anyway) — cliques converge in the seed itself, so the loop only
-    # pays rounds for diameter beyond 1
+    # cost anyway) — cliques converge in the seed itself, so their first
+    # round only confirms the fixpoint
     labels = (
         sym.groupBy("v")
         .agg(F.min("w").alias("mw"))
@@ -1213,36 +1210,14 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
 
-    def _nbr_min(lbl: DataFrame) -> DataFrame:
-        return (
-            sym.join(lbl.select(F.col("v").alias("w"), F.col("label")), "w")
-            .groupBy("v")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-
+    converged = False
     try:
-        # convergence CHECK before any propagation round (r15): near-dup
-        # graphs are unions of quasi-cliques whose components converge in
-        # the seed itself "regardless of corpus size" — yet the loop paid
-        # a full round (build new labels + checkpoint-materialize them +
-        # a second count job) just to learn changed == 0. The fixpoint
-        # condition is exactly "no vertex sees a neighbor label below its
-        # own", countable from the seed WITHOUT building or materializing
-        # a successor table: one aggregation-shaped action instead of a
-        # checkpoint + count pair. Converged-at-seed corpora (the common
-        # case at any scale) save a labels-table materialization per CC
-        # call; a non-converged corpus pays one extra aggregation pass
-        # before the rounds (bounded — the same join+agg a round runs).
-        converged = (
-            _nbr_min(labels)
-            .join(labels, "v")
-            .filter(F.col("nbr_label") < F.col("label"))
-            .count()
-        ) == 0
         for i in range(max_iter):
-            if converged:
-                break
-            nbr_min = _nbr_min(labels)
+            nbr_min = (
+                sym.join(labels.select(F.col("v").alias("w"), F.col("label")), "w")
+                .groupBy("v")
+                .agg(F.min("label").alias("nbr_label"))
+            )
             proposed = labels.join(nbr_min, "v", "left").select(
                 "v",
                 F.col("label").alias("old_label"),
@@ -2374,17 +2349,23 @@ def incremental_roster_refresh(
             corpus, increment, text_col, id_col, threshold, k,
             max_pairs=max_pairs, corpus_staged=c_staged,
             increment_staged=i_staged,
-        ).persist()
-        cross.write.format("noop").mode("overwrite").save()
+        )
+        batch = None
         try:
+            cross.persist()
+            cross.write.format("noop").mode("overwrite").save()
             batch = minhash_lsh_pairs_collapsed(
                 increment, text_col, id_col, threshold, k,
                 max_pairs=max_pairs, staged=i_staged,
             ).persist()
             batch.write.format("noop").mode("overwrite").save()
         except Exception:
-            unpersist_intermediates(cross)
-            _unpersist_quiet(cross)
+            # a failed materialization must not leave either pair list
+            # (or the intermediates it tracks) pinned for the session
+            for fr in (cross, batch):
+                if fr is not None:
+                    unpersist_intermediates(fr)
+                    _unpersist_quiet(fr)
             raise
         return cross, batch
 
@@ -2714,7 +2695,7 @@ def ngram_jaccard_pairs_collapsed(
         # expression filter on the rep docs — no pairing work); persisted
         # because em is referenced by both sides of the within self-join
         eligible = rep_docs.filter(
-            F.size(shingles(words(F.col(text_col)), k)) > 0
+            F.size(word_shingles(F.col(text_col), k)) > 0
         ).select(F.col(id_col).alias("rep")).persist()
     em = mem.join(eligible, "rep")
     within = (

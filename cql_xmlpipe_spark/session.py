@@ -4,6 +4,18 @@ Local test profile: ``local[$SPARK_GRAFT_CPUS]`` single-JVM. The configs
 below are chosen for cluster-scale behavior too: AQE (runtime re-plan,
 partition coalescing, skew-join splitting) and Arrow for every Python
 boundary. On a real cluster only ``master`` and the memory knobs change.
+
+Shuffle width: ``spark.sql.shuffle.partitions`` defaults to
+:data:`SHUFFLE_PARTITIONS_PER_CORE` × the resolved core count, so every
+shuffle stage runs about two waves of tasks on the cores it has. AQE
+cannot narrow every stage (a checkpointed table keeps the hash
+partitioning it was written with, and stages reading it keep that width),
+so a fixed wide default (it was 32) made small iterative jobs, especially
+the connected-components rounds, run mostly empty tasks on a small host.
+``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (or the ``shuffle_partitions``
+argument) overrides the derived width. The driver heap is sized from the
+host the same way (:func:`default_driver_mem`); ``SPARK_GRAFT_DRIVER_MEM``
+overrides it.
 """
 
 from __future__ import annotations
@@ -12,7 +24,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+SHUFFLE_PARTITIONS_PER_CORE = 2
+MAX_DRIVER_MEM_GB = 48
+
+
+def default_driver_mem() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a quarter of
+    physical memory, between 1 and :data:`MAX_DRIVER_MEM_GB` GiB. The JVM
+    grows its heap toward ``-Xmx`` before it collects hard, so a cap above
+    what the host has gets the driver OOM-killed instead of collected."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf on this platform
+        return f"{MAX_DRIVER_MEM_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, phys // 4 // 2**30))}g"
 
 
 def get_spark(
@@ -30,8 +55,11 @@ def get_spark(
     divergence).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n_cores = (os.cpu_count() or 1) if str(cpus) == "*" else int(cpus)
     shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+        os.environ.get(
+            "SPARK_GRAFT_SHUFFLE_PARTITIONS", SHUFFLE_PARTITIONS_PER_CORE * n_cores
+        )
     )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -42,7 +70,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # events.parquet stores TIMESTAMP(NANOS); Spark has no ns timestamp

@@ -46,8 +46,14 @@ def _stage_dir(sf_dir: str) -> str:
     # tag over the resolved file LIST, not just the table path: a rewritten
     # Spark table gets new random part-file names, which must map to a fresh
     # staging dir — otherwise stale links beyond the new file count would
-    # keep feeding old data into the stream
-    tag = hashlib.md5("\0".join([src] + files).encode()).hexdigest()[:12]
+    # keep feeding old data into the stream. Each file's size and mtime
+    # join the tag too: a single-file table rewritten in place keeps its
+    # name, and must still get a fresh dir (and _SCHEMA_CACHE key)
+    stamps = []
+    for f in files:
+        st = os.stat(f)
+        stamps.append(f"{f}\0{st.st_size}\0{st.st_mtime_ns}")
+    tag = hashlib.md5("\0".join([src] + stamps).encode()).hexdigest()[:12]
     root = os.path.join("/tmp", "spark_graft_stream")
     d = os.path.join(root, tag)
     # housekeeping: a rewritten source table mints a fresh tag dir, so
@@ -77,9 +83,10 @@ def _stage_dir(sf_dir: str) -> str:
 
 
 #: staged-dir -> probed parquet schema. The stage dir is content-addressed
-#: (its tag hashes the resolved source file LIST, see _stage_dir), so a
-#: rewritten source table mints a new key and can never serve a stale
-#: schema. Schema METADATA only — never data or results; it removes the
+#: (its tag hashes the resolved source file list with each file's size and
+#: mtime, see _stage_dir), so a rewritten source table — renamed part files
+#: or one file rewritten in place — mints a new key and can never serve a
+#: stale schema. Schema METADATA only — never data or results; it removes the
 #: per-stream-start footer probe that every streaming gate paid (r15,
 #: guide §1.2 "don't recompute": five gates × three bench passes probed
 #: the same immutable file list fifteen times).
@@ -97,7 +104,7 @@ def stream_events(
     batch reader's schema for the same file — a footer-only read — and
     normalize ``ts`` to a µs TimestampType either way, identical to
     ``sources/registry.load_table``. The probe is memoized per staged
-    dir (content-addressed over the file list), so a session running
+    dir (content-addressed over the file list, sizes and mtimes), so a session running
     many streams over one source reads the footer once.
     """
     # vanilla-session safety: without this runtime conf a NANOS file is

@@ -1237,6 +1237,42 @@ def test_incremental_roster_refresh_equals_serial_composition(spark):
         )
 
 
+def test_incremental_roster_refresh_releases_cross_on_failed_materialization(
+    spark, monkeypatch
+):
+    """A failure while materializing the cross-probe pair list (after
+    its persist) must unpersist it and every frame it tracks, along
+    with the stagings and the standing rosters: the session's cache
+    ends empty."""
+    fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(i, fam) for i in range(4)] + [(20, fam), (21, "novel batch words")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    corpus = df.filter(F.col("doc_id") < 20)
+    inc = df.filter(F.col("doc_id") >= 20)
+    spark.catalog.clearCache()
+
+    real = DD.incremental_probe_pairs
+    tracked = []
+
+    def failing_probe(*a, **kw):
+        out = real(*a, **kw)
+        cached = getattr(out, "_xmlpipe_cached", [])
+        tracked.extend(cached)
+        bad = out.withColumn("_boom", F.raise_error(F.lit("planted cross failure")))
+        bad._xmlpipe_cached = list(cached)
+        tracked.append(bad)
+        return bad
+
+    monkeypatch.setattr(DD, "incremental_probe_pairs", failing_probe)
+    with pytest.raises(Exception, match="planted cross failure"):
+        DD.incremental_roster_refresh(corpus, inc, threshold=0.35, k=3)
+    assert tracked, "the planted probe never ran"
+    assert all(
+        not (t.storageLevel.useMemory or t.storageLevel.useDisk) for t in tracked
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_incremental_roster_update_iterates_across_ingests(spark):
     """The production loop: rosters updated by ingest #1 are the valid
     standing state for ingest #2 (corpus grows by the merged batch), and

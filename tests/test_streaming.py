@@ -186,6 +186,51 @@ def test_stateful_all_null_values_user_matches_sql_sum(spark, tmp_path):
     assert by_user[2]["sum_value_cents"] is None
     assert by_user[2]["n_events"] == 2
 
+
+def test_stream_events_sees_single_file_rewritten_in_place(spark, tmp_path):
+    """A single-file events.parquet rewritten in place (same path, new
+    ``ts`` physical type) must get a fresh staged dir and a fresh schema
+    probe: a stale NANOS-as-long schema cannot read a MICROS file."""
+    import os
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cql_xmlpipe_spark.streaming import sources as SRC
+
+    sf = str(tmp_path)
+    t0 = datetime(2024, 1, 1, 12, 0, 0, 123456)
+    t0_us = int(t0.replace(tzinfo=timezone.utc).timestamp()) * 10**6 + 123456
+
+    def write(unit: str, n: int) -> None:
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array([t0] * n, pa.timestamp(unit, tz="UTC")),
+                "user_id": pa.array([1] * n, pa.int64()),
+                "event_type": pa.array(["click"] * n),
+                "value": pa.array([1.0] * n),
+                "props": pa.array(["{}"] * n),
+            }),
+            os.path.join(sf, "events.parquet"),
+        )
+
+    seen = []
+    for i, (unit, n) in enumerate([("ns", 3), ("us", 4)]):
+        write(unit, n)
+        d = SRC._stage_dir(sf)
+        got = _run_to_memory(
+            stream_events(spark, sf), f"t_rewrite_{i}", "append", spark
+        )
+        rows = sorted(
+            tuple(r) for r in got.select("event_id", F.unix_micros("ts")).collect()
+        )
+        assert rows == [(j, t0_us) for j in range(n)], unit
+        seen.append((d, SRC._SCHEMA_CACHE[d]["ts"].dataType.typeName()))
+    assert seen[0][0] != seen[1][0]
+    assert [t for _, t in seen] == ["long", "timestamp"]
+
 def test_streaming_incremental_probe_equals_batch(spark, tmp_path):
     """The foreachBatch ingest-dedup composition (VERDICT r10 #6): a
     multi-file staged replay of an increment, deduped per micro-batch
